@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** Graph analytics over edge frames (extension — the reference has no
   * graph surface; its nearest neighbor is this repo's pointer-doubling
@@ -313,24 +314,36 @@ object Graph {
     *
     * Peeling is the fixpoint of "drop nodes with alive-degree < k" —
     * deterministic regardless of execution order (the k-core is unique;
-    * batch peeling reaches it). Each round is one edge-partitioned
-    * join of the symmetric edge list against the alive set plus a
-    * partial-agg degree count — shuffled bytes O(edges) worst case,
-    * shrinking as the graph peels; the alive node set is checkpointed
-    * ONCE per round (r11 checkpointed twice) and the superseded round's
-    * blocks are released as soon as the next round materializes, so a
-    * deep cascade pins exactly one O(alive-nodes) block set at any
-    * moment. Rounds needed = the cascade depth, graph-dependent:
-    * `strict = true` (default) throws past `maxIter` rather than
-    * returning a silently-unfinished core.
+    * batch peeling reaches it). Rounds needed = the cascade depth plus
+    * the round that finds no node to drop, graph-dependent: `strict =
+    * true` (default) throws past `maxIter` rather than returning a
+    * silently-unfinished core; `strict = false` returns the degrees
+    * after `maxIter` rounds.
+    *
+    * Two paths, split by the broadcast row bound (the session's
+    * `autoBroadcastJoinThreshold` at ≈16 B per row):
+    *  - driver: with `materialize = true`, the canonical edge list is
+    *    collected ONCE, capped at bound + 1 rows. If it fits, the peel
+    *    runs in memory over dense int ids and int adjacency arrays
+    *    (Batagelj & Zaversnik's O(m) cores decomposition, kept round by
+    *    round so `maxIter` and `strict` act as on the distributed path)
+    *    and the result is a local frame with no checkpoint to release. A graph
+    *    under the bound is one a broadcast join would already hold on
+    *    the driver; peeling it in Spark costs several jobs per round.
+    *  - distributed: a graph over the bound, broadcast disabled
+    *    (threshold ≤ 0) or `materialize = false`. Each round is one
+    *    degree aggregate over the current symmetric edge frame (eagerly
+    *    checkpointed) plus two anti-joins against the nodes peeled that
+    *    round, broadcast when that frontier is under the bound. The
+    *    superseded round's blocks are released as soon as the next
+    *    round materializes, so a deep cascade pins one block set at a
+    *    time.
     *
     * `materialize = true` (default) returns the final in-core degree
-    * pass eagerly checkpointed (release via
-    * [[graft.core.Checkpoints.release]]); `false` returns it as the
-    * lazy join+agg plan over the checkpointed fixpoint node set — the
-    * per-round DAG, inspectable by plan pins (the symmetric edge frame
-    * is unpersisted either way, so lazy-mode actions recompute it from
-    * `edges`).
+    * pass eagerly materialized (release via
+    * [[graft.core.Checkpoints.release]], a no-op on the driver path);
+    * `false` returns it as the lazy degree aggregate over the final
+    * checkpointed edge frame, inspectable by plan pins.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxIter: Int = 50, strict: Boolean = true,
@@ -341,33 +354,115 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val sym = canon.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
-    // r17 opt (guide §2.4): peel by SHRINKING THE EDGE FRAME instead of
-    // re-joining the full edge list against the alive node set. The old
-    // shape paid, EVERY round, two joins of the complete O(m) symmetric
-    // edge frame (each shuffling it) plus the degree aggregate; this
-    // shape pays the degree aggregate over the CURRENT (monotonically
-    // shrinking) edge frame — zero-exchange after the first round,
-    // because the frame is hash-partitioned by src once and both
-    // peel-out anti-joins preserve that partitioning when the dead set
-    // broadcasts — plus two anti-joins against the dead FRONTIER (the
-    // nodes peeled this round: frontier-sized, broadcast below the
-    // row bound; a pathological all-at-once peel falls back to a
-    // regular anti-join). Results identical: the frame maintains the
-    // both-endpoints-alive invariant, so groupBy(src) IS the in-core
-    // degree, and peeling is order-independent (the k-core is unique).
-    var alive = sym.repartition(col("src")).localCheckpoint()
-    var result: DataFrame = null
-    // r18 (ADVICE): the forced-broadcast row bound derives from the
-    // session's autoBroadcastJoinThreshold (≈16 B per built hash-relation
-    // row, conservative) instead of a fixed 2 M rows — a small
-    // deployment's driver is protected by its own configured threshold,
-    // and auto-broadcast disabled (≤ 0) disables the forcing too.
+    // r18 (ADVICE): the broadcast row bound derives from the session's
+    // autoBroadcastJoinThreshold (≈16 B per built hash-relation row,
+    // conservative) — a small deployment's driver is protected by its
+    // own configured threshold, and auto-broadcast disabled (≤ 0)
+    // disables both the forced frontier broadcast and the driver peel.
     val bcastRows = {
       val thr = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
       if (thr <= 0) 0L else thr / 16L
     }
+    // the adjacency array holds 2 entries per edge
+    val localCap = math.min(bcastRows, Int.MaxValue / 2 - 1).toInt
+    // binary ids have no value equality on the driver (Array[Byte])
+    val nodeField = canon.schema("a").copy(name = "node")
+    val localEdges =
+      if (!materialize || localCap <= 0 || nodeField.dataType == BinaryType) None
+      else Some(canon.limit(localCap + 1).collect()).filter(_.length <= localCap)
+    localEdges match {
+      case Some(rows) =>
+        val core = peelLocal(rows, k, maxIter, strict)
+        val schema = StructType(Seq(nodeField,
+          StructField("core_deg", LongType, nullable = false)))
+        edges.sparkSession.createDataFrame(java.util.Arrays.asList(core: _*), schema)
+      case None => peelDistributed(canon, k, maxIter, strict, materialize, bcastRows)
+    }
+  }
+
+  /** The driver path of [[kCore]]: batch-peel canonical (a, b) edge rows
+    * in memory, one round at a time, exactly as the distributed loop
+    * does — a round drops every node whose alive degree is in [1, k);
+    * a node left with no alive edge drops out silently; the round that
+    * finds nothing to drop is the fixpoint and counts toward `maxIter`.
+    * Each round touches only the peeled nodes' adjacency, so the whole
+    * peel is O(nodes + edges).
+    */
+  private def peelLocal(rows: Array[Row], k: Int, maxIter: Int,
+                        strict: Boolean): Array[Row] = {
+    val ids = scala.collection.mutable.HashMap.empty[Any, Int]
+    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def idOf(v: Any): Int = ids.getOrElseUpdate(v, { keys += v; keys.length - 1 })
+    val m = rows.length
+    val ea = new Array[Int](m)
+    val eb = new Array[Int](m)
+    var i = 0
+    while (i < m) { ea(i) = idOf(rows(i).get(0)); eb(i) = idOf(rows(i).get(1)); i += 1 }
+    val n = keys.length
+    val deg = new Array[Int](n)
+    i = 0
+    while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
+    // CSR adjacency: node v's neighbours are adj(off(v) until off(v + 1))
+    val off = new Array[Int](n + 1)
+    var v = 0
+    while (v < n) { off(v + 1) = off(v) + deg(v); v += 1 }
+    val fill = java.util.Arrays.copyOf(off, n)
+    val adj = new Array[Int](2 * m)
+    i = 0
+    while (i < m) {
+      adj(fill(ea(i))) = eb(i); fill(ea(i)) += 1
+      adj(fill(eb(i))) = ea(i); fill(eb(i)) += 1
+      i += 1
+    }
+    val gone = new Array[Boolean](n)
+    // invariant at each round start: frontier = the alive nodes with
+    // degree in [1, k); every other alive node has degree ≥ k or 0
+    var frontier = (0 until n).filter(deg(_) < k).toArray
+    var converged = false
+    var iter = 0
+    while (!converged && iter < maxIter) {
+      if (frontier.isEmpty) converged = true
+      else {
+        frontier.foreach(gone(_) = true)
+        val next = scala.collection.mutable.ArrayBuilder.make[Int]
+        for (d <- frontier; j <- off(d) until off(d + 1)) {
+          val u = adj(j)
+          if (!gone(u)) {
+            deg(u) -= 1
+            if (deg(u) == k - 1) next += u // crossed below k: once per node
+          }
+        }
+        frontier = next.result().filter(deg(_) > 0)
+      }
+      iter += 1
+    }
+    if (!converged && strict) throw notConverged(maxIter)
+    (0 until n).iterator.filter(u => !gone(u) && deg(u) > 0)
+      .map(u => Row(keys(u), deg(u).toLong)).toArray
+  }
+
+  private def notConverged(maxIter: Int) = new IllegalStateException(
+    s"kCore: not converged after $maxIter peel rounds; raise maxIter " +
+      "(or pass strict = false to accept a partially peeled graph)")
+
+  /** The distributed path of [[kCore]] over the canonical edge frame. */
+  private def peelDistributed(canon: DataFrame, k: Int, maxIter: Int,
+                              strict: Boolean, materialize: Boolean,
+                              bcastRows: Long): DataFrame = {
+    val sym = canon.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
+    // r17 opt (guide §2.4): peel by SHRINKING THE EDGE FRAME instead of
+    // re-joining the full edge list against the alive node set. Each
+    // round pays the degree aggregate over the CURRENT (monotonically
+    // shrinking) edge frame plus two anti-joins against the dead
+    // FRONTIER (the nodes peeled this round: frontier-sized, broadcast
+    // below the row bound; a pathological all-at-once peel falls back
+    // to a regular anti-join). Results identical: the frame maintains
+    // the both-endpoints-alive invariant, so groupBy(src) IS the
+    // in-core degree, and peeling is order-independent (the k-core is
+    // unique).
+    var alive = sym.localCheckpoint()
+    var result: DataFrame = null
     // r18 (ADVICE): the CURRENT round's checkpoints are tracked so the
     // catch can release them — an exception between deg's checkpoint and
     // its release (dead.count(), the anti-join checkpoint) previously
@@ -403,9 +498,7 @@ object Graph {
         }
         iter += 1
       }
-      if (result == null && strict) throw new IllegalStateException(
-        s"kCore: not converged after $maxIter peel rounds; raise maxIter " +
-          "(or pass strict = false to accept a partially peeled graph)")
+      if (result == null && strict) throw notConverged(maxIter)
       if (!materialize) {
         // lazy: the final degree pass as a LIVE aggregate over the final
         // edge checkpoint (the per-round DAG shape, inspectable by plan

@@ -71,9 +71,10 @@ object Dsir {
     */
   /** `materialize = true` (default) shares the tokenized raw frame
     * across its three consumers (persist) and returns an eagerly
-    * checkpointed result so no cache outlives the call; `false` returns
-    * the pure lazy plan — for plan inspection and for composing into a
-    * larger DAG that manages its own materialization.
+    * checkpointed result so no cache or broadcast outlives the call;
+    * `false` returns the pure lazy plan — for plan inspection and for
+    * composing into a larger DAG that manages its own materialization
+    * (its plan reads the ratio broadcast, so that stays alive).
     */
   def importanceWeights(raw: DataFrame, target: DataFrame,
                         textCol: String, idCol: String,
@@ -156,8 +157,9 @@ object Dsir {
       if (!materialize) lazyOut
       // materialize the (one-row-per-raw-doc) result inside the try so
       // the finally drops the tokenized cache only after the checkpoint
-      // holds the data (the SetJoin pattern)
-      else lazyOut.localCheckpoint(eager = true)
+      // holds the data (the SetJoin pattern); the checkpoint cuts the
+      // lineage, so the ratio broadcast has no reader left either
+      else try lazyOut.localCheckpoint(eager = true) finally lrBc.destroy()
     } finally if (materialize) rawBp.unpersist(blocking = false)
   }
 

@@ -424,7 +424,9 @@ object TextAnalysis {
     * vocab, one per-doc reassembly groupBy with an in-row `array_sort`
     * back to document order (never a global window). Both paths emit
     * identical rows — ids in document token order, OOV → `oovId`, docs
-    * with zero tokens absent.
+    * with zero tokens absent. The returned plan is lazy and reads the
+    * dictionary broadcast, so the broadcast is not destroyed here: the
+    * ContextCleaner removes it once the returned frame is unreachable.
     */
   def encodeTokens(df: DataFrame, textCol: String, idCol: String,
                    rankedVocab: DataFrame, oovId: Int = -1): DataFrame = {

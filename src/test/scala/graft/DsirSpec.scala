@@ -104,4 +104,44 @@ class DsirSpec extends SparkTestBase {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
+
+  test("importanceWeights(materialize = true) destroys its ratio broadcast") {
+    import org.apache.spark.SparkEnv
+    import org.apache.spark.storage.BroadcastBlockId
+    // an odd bucket count: the only broadcast holding a Double array of
+    // this length is the call's ratio table
+    val buckets = 3001
+    def ratioTables(): Int = {
+      val bm = SparkEnv.get.blockManager
+      bm.getMatchingBlockIds {
+        case BroadcastBlockId(_, "") => true
+        case _ => false
+      }.count { id =>
+        // consuming the values releases the block's read lock
+        bm.getLocalValues(id).exists(_.data.toList match {
+          case List(a: Array[Double]) => a.length == buckets
+          case _ => false
+        })
+      }
+    }
+    def settle(want: Int): Int = {
+      // destroy() removes the blocks asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var n = ratioTables()
+      while (n > want && System.nanoTime() < deadline) {
+        Thread.sleep(50); n = ratioTables()
+      }
+      n
+    }
+    val before = ratioTables()
+    val w = Dsir.importanceWeights(raw, target, "text", "doc_id", buckets)
+    assert(settle(before) == before, "the ratio broadcast outlived the call")
+    assert(w.count() == 5, "the checkpointed weights must stay readable")
+    graft.core.Checkpoints.release(w)
+    // the lazy plan reads the broadcast, so it stays
+    val lazyW = Dsir.importanceWeights(raw, target, "text", "doc_id", buckets,
+      materialize = false)
+    assert(ratioTables() == before + 1)
+    assert(lazyW.count() == 5)
+  }
 }

@@ -123,21 +123,96 @@ class GraphSpec extends SparkTestBase {
     assert(tc(0L) == 6L && (1 to 6).forall(i => tc(i.toLong) == 2L), s"got $tc")
   }
 
+  // kCore peels on the driver under the broadcast row bound (the default
+  // 10 MB threshold) and in Spark with broadcast disabled
+  private val kCorePaths = Seq("10485760", "-1")
+  private def onKCorePath[T](threshold: String)(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold)(body)
+  private def peeledOnDriver(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
   test("kCore: cascade peels the tail, core degrees reported, strict guard") {
     // lollipop: K5 (ids 1-5, deg 4) + tail 5-6-7-8. 2-core: the tail
     // peels back node by node (8 first, then 7, then 6 — a 3-round
-    // cascade), K5 survives with in-core degree 4.
+    // cascade, plus the round that finds nothing left to peel), K5
+    // survives with in-core degree 4.
     val k5 = (for { a <- 1 to 5; b <- 1 to 5 if a < b } yield (a.toLong, b.toLong))
     val tail = Seq((5L, 6L), (6L, 7L), (7L, 8L))
-    val out = Graph.kCore((k5 ++ tail).toDF("src", "dst"), "src", "dst", k = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 4L), s"got $out")
-    // whole graph unravels at k above the max core
-    assert(Graph.kCore(tail.toDF("src", "dst"), "src", "dst", k = 2).count() == 0)
-    // strict: a cascade deeper than maxIter must throw, not return junk
-    intercept[IllegalStateException] {
-      Graph.kCore((k5 ++ tail).toDF("src", "dst"), "src", "dst", k = 2, maxIter = 1)
+    val g = (k5 ++ tail).toDF("src", "dst")
+    for (thr <- kCorePaths) onKCorePath(thr) {
+      val core = Graph.kCore(g, "src", "dst", k = 2)
+      assert(peeledOnDriver(core) == (thr != "-1"), s"threshold $thr")
+      val out = asMap(core)
+      assert(out == Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 4L),
+        s"threshold $thr: got $out")
+      graft.core.Checkpoints.release(core)
+      // whole graph unravels at k above the max core
+      assert(Graph.kCore(tail.toDF("src", "dst"), "src", "dst", k = 2).count() == 0)
+      // strict: a cascade deeper than maxIter must throw, not return junk;
+      // the fixpoint round counts, so 3 rounds are one short
+      for (rounds <- Seq(1, 3)) intercept[IllegalStateException] {
+        Graph.kCore(g, "src", "dst", k = 2, maxIter = rounds)
+      }
+      assert(asMap(Graph.kCore(g, "src", "dst", k = 2, maxIter = 4)) == out)
+      // non-strict: the degrees after one round (8 peeled, 7 left at 1)
+      val partial = asMap(Graph.kCore(g, "src", "dst", k = 2, maxIter = 1,
+        strict = false))
+      assert(partial == Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 5L,
+        6L -> 2L, 7L -> 1L), s"threshold $thr: got $partial")
     }
+  }
+
+  test("kCore: the capped edge collect picks the path at the row bound") {
+    // the bound is threshold / 16 CANONICAL edges: the lollipop has 13,
+    // whatever the reversed duplicates and self-loop in the raw rows
+    val g = lollipop.unionAll(lollipop.select(col("dst"), col("src")))
+      .unionAll(Seq((3L, 3L)).toDF("src", "dst"))
+    val want = Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 4L)
+    for ((edgesUnderBound, onDriver) <- Seq(13 -> true, 12 -> false))
+      onKCorePath((16 * edgesUnderBound).toString) {
+        val core = Graph.kCore(g, "src", "dst", k = 2)
+        assert(peeledOnDriver(core) == onDriver, s"bound $edgesUnderBound")
+        assert(asMap(core) == want, s"bound $edgesUnderBound")
+        assert(core.schema == Graph.kCore(g, "src", "dst", k = 2,
+          materialize = false).schema)
+        graft.core.Checkpoints.release(core)
+      }
+    // binary ids have no value equality on the driver: always distributed
+    val bin = g.select(col("src").cast("string").cast("binary").as("src"),
+      col("dst").cast("string").cast("binary").as("dst"))
+    val binCore = Graph.kCore(bin, "src", "dst", k = 2)
+    assert(!peeledOnDriver(binCore))
+    assert(binCore.collect().map(r => new String(r.getAs[Array[Byte]](0)).toLong ->
+      r.getLong(1)).toMap == want)
+    graft.core.Checkpoints.release(binCore)
+  }
+
+  test("kCore on a broadcast-sized graph runs a fixed number of jobs, whatever the peel depth") {
+    // a chain at k = 2 peels from both ends, two nodes a round: the
+    // 64-node chain takes 32 rounds, the 16-node one 8
+    def jobsFor(nodes: Long): Int = {
+      val chain = (1L until nodes).map(i => (i, i + 1)).toDF("src", "dst")
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      waitListenerBus()
+      spark.sparkContext.addSparkListener(listener)
+      val core =
+        try {
+          val c = Graph.kCore(chain, "src", "dst", k = 2)
+          waitListenerBus()
+          c
+        } finally spark.sparkContext.removeSparkListener(listener)
+      assert(core.isEmpty, s"the $nodes-node chain has no 2-core")
+      jobs.get
+    }
+    val deep = jobsFor(64)
+    assert(deep <= 4, s"kCore ran $deep jobs on the 64-node chain")
+    assert(jobsFor(16) == deep, "kCore's job count grew with the peel depth")
   }
 
   test("connectedComponents labels a chain by its minimum id") {
@@ -217,9 +292,10 @@ class GraphSpec extends SparkTestBase {
     assert((pinnedIds -- before).isEmpty,
       "release(connectedComponents result) must free the final round's " +
         s"checkpoint blocks; still pinned: ${pinnedIds -- before}")
-    // kCore on the lollipop peels a 3-round cascade; same discipline
+    // kCore's distributed loop on the lollipop peels a 3-round cascade;
+    // same discipline (the driver path pins nothing)
     val before2 = pinnedIds
-    val kc = Graph.kCore(lollipop, "src", "dst", k = 2)
+    val kc = onKCorePath("-1")(Graph.kCore(lollipop, "src", "dst", k = 2))
     assert(kc.count() == 5)
     val leakedKc = (pinnedIds -- before2).size
     assert(leakedKc <= 1, s"kCore left $leakedKc pinned RDDs")

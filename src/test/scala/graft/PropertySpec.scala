@@ -494,13 +494,25 @@ class PropertySpec extends SparkTestBase {
       }
       val k = 2 + rng.nextInt(2)
       val df = edges.toDF("s", "d").repartition(1 + rng.nextInt(5))
-      val core = graft.operators.Graph.kCore(df, "s", "d", k)
-      val got = core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      graft.core.Checkpoints.release(core)
-      // serial peel over the canonical simple graph (the fixpoint is
-      // unique, so any peeling order reaches the same core)
       val simple = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .filter(e => e._1 != e._2).distinct
+      // the driver peel under the default broadcast bound; the
+      // distributed loop after a capped collect that overflows a bound
+      // one edge short (16 B per row), and with broadcast disabled
+      val got = Seq("10485760" -> true, (16L * (simple.size - 1)).toString -> false,
+          "-1" -> false).map { case (thr, driverPath) =>
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> thr) {
+          val core = graft.operators.Graph.kCore(df, "s", "d", k)
+          val onDriver = core.queryExecution.analyzed
+            .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+          assert(onDriver == driverPath, s"seed=$seed threshold $thr")
+          val out = core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          graft.core.Checkpoints.release(core)
+          thr -> out
+        }
+      }
+      // serial peel over the canonical simple graph (the fixpoint is
+      // unique, so any peeling order reaches the same core)
       var adj = simple.flatMap(e => Seq(e._1 -> e._2, e._2 -> e._1))
         .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
       var changed = true
@@ -510,7 +522,9 @@ class PropertySpec extends SparkTestBase {
         adj = adj.collect { case (n, ns) if !drop(n) => n -> (ns -- drop) }
       }
       val want = adj.map { case (n, ns) => n -> ns.size.toLong }
-      assert(got == want, s"seed=$seed k=$k diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
+      for ((thr, out) <- got)
+        assert(out == want, s"seed=$seed k=$k threshold $thr " +
+          s"diff=${(out.toSet diff want.toSet) ++ (want.toSet diff out.toSet)}")
     }
   }
 

@@ -9,16 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class ScaleSpec extends SparkTestBase {
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("bucketed co-located join runs without any Exchange") {
     import spark.implicits._
     val facts = (1L to 1000L).map(i => (i % 50, s"f$i")).toDF("k", "payload")
@@ -399,19 +389,12 @@ class ScaleSpec extends SparkTestBase {
       }
     }
     // drain in-flight events from earlier tests before counting
-    def waitBus(): Unit = {
-      val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-      val bus = busM.invoke(spark.sparkContext)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    }
-    waitBus()
+    waitListenerBus()
     spark.sparkContext.addSparkListener(listener)
     try {
       val got = operators.Views.budgetSelect(df, order, "cost", 600000L)
       got.write.format("noop").mode("overwrite").save() // the lazy filter too
-      waitBus()
+      waitListenerBus()
       assert(shuffleRecords == 0L,
         s"sampled budgetSelect wrote $shuffleRecords shuffle records — " +
           "the r18 shape must be map-only passes + driver finish")
